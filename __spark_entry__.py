@@ -7378,9 +7378,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # driver row (r1-r3 vintage) predates a semantic fix (the ROUND-seam
     # repair, commit 36db70f). That makes every query's newest semantics
     # driver-checked or queued in a window that fits the ~50-entry gate.
-    # ROUND-6 ROTATION (if a next round happens): q01-q50 first — their
-    # rows are r1-r3 vintage — i.e. swap the group keys so `n <= 50`
-    # returns (0, n).
+    # Round 6 puts q01-q50 first — their driver rows are r1-r3 vintage,
+    # q11's included — and keeps the round-5 order behind them.
     # Names and semantics are untouched — pinned by
     # tests/test_query_hash_pin.py against the pre-reorder sf0.01 value
     # hashes in tests/fixtures/query_hashes_sf001.json.
@@ -7391,12 +7390,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _rotation(name: str) -> tuple[int, int]:
         n = _num(name)
         if n >= 101:
-            return (0, n)  # round-5 driver window (never driver-checked)
-        if n in (87, 11):
-            return (1, n)  # retests: q87 schema fix, q11 stale driver row
+            return (0, n)  # driver-checked first in r5
+        if n == 87:
+            return (1, n)  # retest: q87 schema fix
         if 51 <= n <= 100:
             return (2, n)  # driver-green in r4
-        return (3, n)  # q01-q50 rest: driver-green r1-r3; round-6 window
+        return (-1, n)  # q01-q50: driver rows r1-r3 vintage; round-6 window
 
     return {name: base[name] for name in sorted(base, key=_rotation)}
 

@@ -1,10 +1,12 @@
 """Benchmark harness.
 
-Measures end-to-end pipeline throughput (parse -> enrich -> route -> assemble
--> aggregate, all sinks materialized via the noop writer) over a synthesized
-transcripts table, at two parallelism levels on identical input:
-``local[N_SMALL]`` vs ``local[N_BIG]`` (N and 4N cores — the sandbox stand-in
-for the north rule's N vs 4N executors). Prints ONE JSON line:
+Measures end-to-end pipeline throughput of the shipped batch runner
+(``plans.pipeline.write_sinks``, the path ``main.py --mode batch`` runs:
+parse once into the cache, write every sink in ``SINKS`` to parquet with
+Observation row counts) over a synthesized transcripts table, at two
+parallelism levels on identical input: ``local[N_SMALL]`` vs ``local[N_BIG]``
+(N and 4N cores — the sandbox stand-in for the north rule's N vs 4N
+executors). Prints ONE JSON line:
 
   {"metric": ..., "value": <wall sec at local[BIG]>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,
@@ -27,18 +29,10 @@ Scaling-measurement design:
     input (GCLP_BENCH_REPLICATE_SCALE, default 150 -> 15M turns), sized so
     the ~10 s fixed per-run cost stays under ~10% of the fast leg; the
     headline throughput still uses the full input.
-  * the measured pipeline materializes the parsed table to parquet via the
-    storage seam (`build(materialize_table=...)`) rather than an in-memory
-    cache: at 10^12-turn scale the parsed table lives on storage (Iceberg)
-    and each sink reads it column-pruned, and locally the cache's
-    unified-memory dynamics (unroll/borrow/evict/spill) made wall time
-    nondeterministic (observed 148-380 s swings at identical settings)
-    while the parquet variant is both faster warm and stable.
+  * the measured pipeline is the one that ships: no bench-only variant, so
+    the headline and ``main.py --mode batch`` time the same jobs.
   * JIT/codegen warmup runs on a small replica of the same shape so the
     measured runs pay no first-compile cost but warmup stays cheap.
-  * the 8 sink writes are issued from concurrent threads after the shared
-    parse cache is materialized (the standard multi-sink pattern: overlap
-    job scheduling, keep the cluster full through small-stage tails).
   * headline throughput ("value", per-query secs) is still measured at
     local[$SPARK_GRAFT_CPUS] — all 32 cores.
   * every level runs in its OWN subprocess: the PySpark JVM gateway
@@ -79,18 +73,12 @@ import json
 import os
 import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SCALE_SMALL = int(os.environ.get("GCLP_BENCH_SCALE_SMALL", "2"))
 SCALE_BIG = int(os.environ.get("GCLP_BENCH_SCALE_BIG", "8"))
 WARMUP_REPLICATE = 2
-
-SINKS = (
-    "pause_events", "tool_calls", "dead_letter", "assembled",
-    "conv_state", "bucket_turns", "bucket_pauses", "dur_histogram",
-)
 
 
 def _noop_write(df) -> None:
@@ -115,24 +103,14 @@ def _materialize_transcripts(sf_dir: str, replicate: int, path: str) -> int:
 
 
 def run_pipeline_once(spark, transcripts_path: str, tag: str = "w") -> float:
-    """Full pipeline, every sink + aggregate materialized. Returns wall sec.
+    """One pass of the shipped batch runner: every sink in ``SINKS`` written
+    to parquet under a per-level scratch dir. Returns wall sec."""
+    from java9_gc_log_parser_spark.plans.pipeline import write_sinks
 
-    The parsed table is materialized through the storage seam (parquet
-    intermediate — the at-scale design: on a real cluster this is the
-    Iceberg `parsed` table) and the 8 sinks then read it column-pruned from
-    concurrent threads. Measured against the in-memory cache variant this
-    is both faster at local[8] (80 s vs 97 s warm) and far more
-    deterministic (the cache's unified-memory dynamics gave 148-380 s
-    swings at identical settings — GC archaeology, not pipeline cost).
-    """
-    from java9_gc_log_parser_spark.plans.pipeline import build
-
-    inter = f"/tmp/gclp_bench_parsed_{tag}.parquet"
+    out = f"/tmp/gclp_bench_out_{tag}"
     transcripts = spark.read.parquet(transcripts_path)
     t0 = time.perf_counter()
-    dfs = build(transcripts, materialize_table=inter)
-    with ThreadPoolExecutor(len(SINKS)) as ex:
-        list(ex.map(lambda s: _noop_write(dfs[s]), SINKS))
+    write_sinks(transcripts, lambda sink: f"{out}/{sink}")
     return time.perf_counter() - t0
 
 

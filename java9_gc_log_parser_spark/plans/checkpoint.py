@@ -36,7 +36,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..storage import (
@@ -49,9 +49,7 @@ from ..storage import (
     table_scan_stats,
     write_table,
 )
-from .pipeline import build
-
-SINKS = ("pause_events", "tool_calls", "dead_letter", "assembled", "conv_state")
+from .pipeline import write_sinks
 
 
 @dataclass
@@ -159,19 +157,9 @@ def run_batch(
         transcripts = read_table(spark, src.location).filter(F.expr(predicate))
         scan_files, scan_bytes = table_scan_stats(spark, src)
     t0 = time.perf_counter()
-    dfs = build(transcripts, persist=True)
-    rows_in = dfs["parsed"].count()
-    sink_rows = {}
-    for sink in SINKS:
-        out = os.path.join(root, sink, f"batch={batch_id}")
-        df: DataFrame = dfs[sink]
-        # row metric collected DURING the write (Observation piggybacks on
-        # the write job) — re-reading the committed files to count them is
-        # one extra scan of the entire output per sink per batch, which at
-        # 100 TB means re-reading everything you just wrote
-        obs = Observation(f"sink_rows_{sink}_{batch_id}")
-        write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), out)
-        sink_rows[sink] = int(obs.get["rows"])
+    rows_in, sink_rows = write_sinks(
+        transcripts, lambda sink: os.path.join(root, sink, f"batch={batch_id}")
+    )
     commit_check = None
     if verify_commit:
         # cheap integrity spot-check: read back the smallest sink and compare
@@ -190,7 +178,6 @@ def run_batch(
             raise RuntimeError(
                 f"commit check failed for batch {batch_id}: {commit_check}"
             )
-    dfs["parsed"].unpersist()
     wall = time.perf_counter() - t0
     rec = {
         "batch_id": batch_id,

@@ -36,6 +36,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from java9_gc_log_parser_spark.operators.similarity import ivfpq_encode
 
@@ -45,6 +46,15 @@ __all__ = [
     "maintain_index",
     "read_index",
 ]
+
+#: one generation's rows as stored: ``ivfpq_encode``'s columns, with the
+#: ``cell`` partition column last (where a partitioned read puts it)
+INDEX_SCHEMA = T.StructType([
+    T.StructField("vec_id", T.LongType()),
+    T.StructField("s", T.IntegerType()),
+    T.StructField("code", T.IntegerType()),
+    T.StructField("cell", T.LongType()),
+])
 
 
 def current_generation(out_root: str) -> int | None:
@@ -136,14 +146,17 @@ def read_index(spark: SparkSession, out_root: str) -> DataFrame:
 
     Each generation dir is read on its own (recovering its ``cell=K``
     partition dirs); a wholesale read of ``out_root`` would misparse the
-    ``batch=N`` dir names as a partition column."""
+    ``batch=N`` dir names as a partition column. Every read carries
+    ``INDEX_SCHEMA``: an empty micro-batch commits a generation dir with no
+    part files, which has no schema to infer."""
     final = current_generation(out_root)
     gens = [f"{out_root}/base"] + (
         [f"{out_root}/batch={i}" for i in range(int(final) + 1)]
         if final is not None
         else []
     )
-    idx = spark.read.parquet(gens[0])
+    read = spark.read.schema(INDEX_SCHEMA).parquet
+    idx = read(gens[0])
     for g in gens[1:]:
-        idx = idx.unionByName(spark.read.parquet(g))
+        idx = idx.unionByName(read(g))
     return idx

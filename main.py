@@ -8,11 +8,14 @@ Packaging (north rule: "packaged for spark-submit --py-files"):
         --mode checkpoint --n-batches 64
 
 Modes:
-  batch      one-shot pipeline, all sinks written once
+  batch      one-shot pipeline (plans.pipeline.write_sinks): parse once into
+             the cache, write every sink once; the printed sink_rows are
+             Observations on the writes, not read-backs of the output
   checkpoint resumable micro-batches with manifest/lineage/metrics (default);
              --prepare-source first rewrites the input partitioned by
              batch_bucket so every micro-batch is a pruned 1/n scan
   synth      generate a transcripts parquet from an events parquet dir
+             (rows counted on the write, as in batch)
 """
 
 from __future__ import annotations
@@ -43,22 +46,18 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark(app_name=f"gclp-{args.mode}", master=args.master)
 
     if args.mode == "synth":
+        from java9_gc_log_parser_spark.plans.pipeline import write_counted
         from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
 
         df = synth_transcripts(spark, args.sf_dir, replicate=args.replicate)
-        df.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"mode": "synth", "rows": spark.read.parquet(args.output).count()}))
+        print(json.dumps({"mode": "synth", "rows": write_counted(df, args.output)}))
         return
 
     if args.mode == "batch":
-        from java9_gc_log_parser_spark.plans.pipeline import build
+        from java9_gc_log_parser_spark.plans.pipeline import write_sinks
 
-        dfs = build(spark.read.parquet(args.input))
-        counts = {}
-        for sink in ("pause_events", "tool_calls", "dead_letter", "assembled",
-                     "conv_state"):
-            dfs[sink].write.mode("overwrite").parquet(f"{args.output}/{sink}")
-            counts[sink] = spark.read.parquet(f"{args.output}/{sink}").count()
+        _, counts = write_sinks(spark.read.parquet(args.input),
+                                lambda sink: f"{args.output}/{sink}")
         print(json.dumps({"mode": "batch", "sink_rows": counts}))
         return
 

@@ -8,7 +8,7 @@ import os
 import pytest
 
 from java9_gc_log_parser_spark.plans import checkpoint as cp
-from java9_gc_log_parser_spark.plans.pipeline import build
+from java9_gc_log_parser_spark.plans.pipeline import SINKS, build, write_sinks
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
 
 
@@ -112,3 +112,38 @@ def test_prepared_source_prunes_scans(spark, sf_dir, tmp_path):
     )
     assert got == want
     single["parsed"].unpersist()
+
+
+def test_runner_counts_match_committed_sinks(spark, source_path, tmp_path):
+    """The batch runner's Observation counts equal what a read-back of the
+    committed sinks finds — the guarantee main.py once paid a re-read of
+    every sink per run for."""
+    root = str(tmp_path / "batch")
+    rows_in, sink_rows = write_sinks(
+        spark.read.parquet(source_path), lambda sink: f"{root}/{sink}"
+    )
+    assert rows_in == spark.read.parquet(source_path).count()
+    assert list(sink_rows) == list(SINKS)
+    for sink in SINKS:
+        assert sink_rows[sink] == spark.read.parquet(f"{root}/{sink}").count(), sink
+    assert min(sink_rows.values()) > 0
+
+
+def test_empty_micro_batch_counts_zero_and_commits(spark, source_path,
+                                                  tmp_path):
+    """A bucket id past the last one selects no rows: every count is 0,
+    each sink still commits a readable empty batch dir, and the manifest
+    line is still written."""
+    root = str(tmp_path / "empty")
+    r = cp.run_batch(spark, source_path, root, 2, 2)
+    assert r.rows_in == 0
+    assert r.sink_rows == {sink: 0 for sink in SINKS}
+    for sink in SINKS:
+        committed = spark.read.parquet(os.path.join(root, sink, "batch=2"))
+        assert committed.count() == 0, sink
+    with open(os.path.join(root, "manifest.jsonl")) as f:
+        recs = [json.loads(l) for l in f]
+    assert [(rec["batch_id"], rec["status"], rec["rows_in"]) for rec in recs] == [
+        (2, "ok", 0)
+    ]
+    assert recs[0]["sink_rows"] == {sink: 0 for sink in SINKS}

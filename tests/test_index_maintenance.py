@@ -98,6 +98,26 @@ def test_replay_of_committed_batch_is_skipped(spark, sf_dir, trained,
     assert after == before
 
 
+def test_empty_batch_commits_readable_generation(spark, sf_dir, trained,
+                                                tmp_path):
+    """A micro-batch of zero vectors commits a generation dir with no part
+    files; read_index must still read the store (base rows only), not fail
+    inferring a schema from the empty dir."""
+    embs, base, cells, books = trained
+    src = str(tmp_path / "src")
+    out_root = str(tmp_path / "gens")
+    embs.filter(F.lit(False)).write.parquet(src)  # one file, zero rows
+    im.write_base_generation(base, cells, books, out_root)
+    im.maintain_index(
+        spark, src, embs.schema, out_root,
+        cells.collect(), cells.schema, books.collect(), books.schema,
+    )
+    assert im.current_generation(out_root) == 0
+    assert _index_rows(im.read_index(spark, out_root)) == _index_rows(
+        ivfpq_encode(base, cells, books)
+    )
+
+
 def test_encode_empty_batch_yields_empty_generation(spark, sf_dir, trained):
     """availableNow can hand foreachBatch an empty final micro-batch; the
     encode of zero vectors must be an empty frame with the index schema,

@@ -72,26 +72,23 @@ def test_hash_unchanged(spark01, fixture_hashes, name):
 
 
 def test_rotation_shape():
-    """Round-5 driver window (first ~50 insertion-order entries): every
-    q101+ query (never driver-checked before r5), then the two retests
-    (q11 stale driver row, q87 schema fix), then q51-q100 (r4-green),
-    then the rest of q01-q50 (r1-r3-green, queued for a round-6
-    window)."""
+    """Round-6 driver window (first ~50 insertion-order entries): q01-q50,
+    whose driver rows date from r1-r3. Behind them the round-5 order
+    stands: q101+ (first driver-checked in r5), the q87 retest, then
+    q51-q100 (r4-green)."""
     names = list(entrymod.queries())
     nums = [int(n[1:n.index("_")]) for n in names]
+    assert nums[:50] == list(range(1, 51))
     n_new = sum(1 for v in nums if v >= 101)
-    assert nums[:n_new] == sorted(v for v in nums if v >= 101)
-    assert nums[n_new:n_new + 2] == [11, 87]
-    assert sorted(nums[n_new + 2:-49]) == [
-        v for v in range(51, 101) if v != 87
-    ]
-    assert sorted(nums[-49:]) == [v for v in range(1, 51) if v != 11]
+    assert nums[50:50 + n_new] == sorted(v for v in nums if v >= 101)
+    assert nums[50 + n_new] == 87
+    assert nums[51 + n_new:] == [v for v in range(51, 101) if v != 87]
     # every query still has an oracle or documented omission
     oracles = entrymod.oracle_sql()
     assert set(oracles) <= set(names)
 
 
-def test_no_complex_typed_output_columns(spark):
+def test_no_complex_typed_output_columns(spark, sf_dir):
     """Driver-canonicalizer conformance (VERDICT r4 task #2): NO
     ``queries()`` entry may emit ArrayType/MapType/StructType columns —
     the driver's pandas canonicalizer sorts cell values and crashes on
@@ -106,7 +103,6 @@ def test_no_complex_typed_output_columns(spark):
         T.ArrayType, T.MapType, T.StructType,
         T.BinaryType, T.DecimalType, T.NullType,
     )
-    sf_dir = "/root/testdata/sf0.001"
     bad = []
     for name, fn in entrymod.queries().items():
         for f in fn(spark, sf_dir).schema.fields:
