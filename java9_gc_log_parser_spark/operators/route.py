@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 from ..functions.grammar import SUPPORTED_PAUSE_TYPES
 from .enrich import enrich
 
-SINKS = ("pause_events", "tool_calls", "unmatched")
-
 
 def supported_types_filter(parsed: DataFrame) -> DataFrame:
     """Replicates GcLogStream.supportedTypesFilter (Cleanup excluded)."""

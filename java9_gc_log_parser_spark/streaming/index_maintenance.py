@@ -18,6 +18,9 @@ effects, and a crash between the generation write and the pointer flip
 re-runs the batch with ``mode("overwrite")`` — idempotent either way.
 ``fail_after`` injects a crash between batches so the resume path is
 exercised by a real test, not asserted in prose.
+Keep or discard the stream checkpoint and this store together: the drain
+keys on the bare batch id, so with only the checkpoint lost, restarted ids
+drain batches of new files and drop their vectors (fix: ROADMAP (C)).
 
 Scale shape (100 TB/day of arriving vectors): per-batch cost is batch
 rows × a few KB of broadcast metadata (``ivfpq_encode``'s plan is

@@ -7,6 +7,9 @@ These tests pin the *plan shape*, not just results:
 - after ``plans.pipeline.build(persist=True)`` every sink reads the parsed
   DataFrame from the InMemoryRelation cache, so the Arrow parse stage runs
   once for all sinks (SURVEY §4 "one-pass fan-out");
+- no batch sink runs a Python worker: no Python RDD scan, no
+  Python-evaluated node, and the enrich dims broadcast a driver-local
+  ``LocalTableScan``;
 - parquet scans get filters pushed down and columns pruned (PushedFilters /
   ReadSchema in the formatted plan) so a 100 TB scan only reads what the
   query projects.
@@ -18,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from java9_gc_log_parser_spark.operators.enrich import enrich
-from java9_gc_log_parser_spark.plans.pipeline import build
+from java9_gc_log_parser_spark.plans.pipeline import SINKS, build
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
 
 
@@ -48,6 +51,35 @@ def test_pipeline_sinks_read_parse_from_cache(spark, sf_dir):
             assert "ArrowEvalPython" not in plan.split("InMemoryTableScan")[0], (
                 f"{sink} re-executes the parse UDF above the cache"
             )
+    finally:
+        dfs["parsed"].unpersist()
+
+
+_PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                 "FlatMapGroupsInPandas")
+
+
+def _broadcast_children(plan: str) -> list[str]:
+    """Node name under each ``BroadcastExchange`` of the formatted tree."""
+    tree = plan.split("\n\n")[0].splitlines()
+    return [tree[i + 1].split("+- ")[1].split(" (")[0]
+            for i, line in enumerate(tree) if "BroadcastExchange (" in line]
+
+
+def test_pipeline_sinks_run_no_python_worker(spark, sf_dir):
+    """Every sink the batch runner writes plans without a Python worker: a
+    ``createDataFrame`` dim would show as ``Scan ExistingRDD`` (a Python
+    RDD scanned by Python tasks on every broadcast)."""
+    dfs = build(synth_transcripts(spark, sf_dir), persist=True)
+    try:
+        for sink in SINKS:
+            plan = _formatted(dfs[sink])
+            assert "Scan ExistingRDD" not in plan, sink
+            assert [n for n in _PYTHON_NODES if n in plan] == [], sink
+        assert _broadcast_children(_formatted(dfs["pause_events"])) == [
+            "LocalTableScan", "LocalTableScan"]
+        assert _broadcast_children(_formatted(dfs["tool_calls"])) == [
+            "LocalTableScan"]
     finally:
         dfs["parsed"].unpersist()
 

@@ -31,6 +31,7 @@ SF_DIR = "/root/testdata/sf0.01"
 PINNED_SAMPLE = [
     "q01_parse_classify",
     "q03_pause_events_sink",
+    "q04_tool_calls_sink",  # q03/q04 left-join the dims, q76 inner-joins
     "q10_bucket_turn_counts",
     "q13_dedup_exact",
     "q30_hash_split",
@@ -38,6 +39,7 @@ PINNED_SAMPLE = [
     "q56_pack_sequences",
     "q60_cms_heavy_hitters",
     "q62_asof_join",
+    "q76_stream_static_join",
     "q79_pricing_summary",
     "q100_grouped_hll_distinct",
     "q104_edit_distance_join",
