@@ -544,12 +544,12 @@ def q28_conv_state_json(spark, sf_dir):
 def q51_stream_metrics_feed(spark, sf_dir):
     """Metrics-heartbeat feed parity (SURVEY §2.8 SC6 — the last
     pytest-only seam from the round-2 verdict): ``stream_conv_state``
-    drains a 32-file scatter at 16 files/trigger, emitting one heartbeat
-    line per micro-batch (batch id, events, convs, wall). Per-batch event
+    drains a 32-file scatter at 16 files/trigger, committing one heartbeat
+    record per micro-batch (batch id, events, convs, wall). Per-batch event
     counts depend on file→trigger assignment and are not engine-
     independent, so the query reduces the feed to invariants that ARE:
 
-      n_batches        == ceil(32/16) heartbeat lines, ids contiguous 0..N-1
+      n_batches        == ceil(32/16) heartbeat records, ids contiguous 0..N-1
       events_total     == the batch assembler's ok-event count
       convs_final      == distinct convs among ok events
       convs_monotonic  == 1 (cumulative state only ever adds conversations)
@@ -559,9 +559,9 @@ def q51_stream_metrics_feed(spark, sf_dir):
     Reference capability: the SSE heartbeat + cumulative GcState push
     (HttpFrontEnd.scala:24-37); the feed is its per-micro-batch metrics
     twin and this entry promotes it from pytest-only into CORRECTNESS."""
-    import json as _json
     import shutil
 
+    from java9_gc_log_parser_spark import commit_log
     from java9_gc_log_parser_spark.streaming.state_stream import (
         final_state,
         stream_conv_state,
@@ -586,11 +586,7 @@ def q51_stream_metrics_feed(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
-    with open(os.path.join(out_root, "metrics.jsonl")) as f:
-        beats = sorted(
-            (_json.loads(line) for line in f if line.strip()),
-            key=lambda b: b["batch_id"],
-        )
+    beats = list(commit_log.committed(spark, out_root).values())
     ids = [b["batch_id"] for b in beats]
     contiguous = ids == list(range(len(beats)))
     convs = [b["convs"] for b in beats]
@@ -1085,34 +1081,23 @@ def q67_stream_cms_maintenance(spark, sf_dir):
     running grid, cells merge by add) must equal the batch grid over the
     whole corpus CELL-FOR-CELL after the drain — associativity is exactly
     what makes a sketch maintainable online, and this query oracles it.
-    Same batch-id-keyed generation + atomic pointer discipline as the
+    Same batch-id-keyed generations + shared ``commit_log`` as the
     conv-state stream (idempotent under foreachBatch replay). At 100 TB/day
     the running grid is a few KB however much history it summarizes — the
     streaming analogue of q60's audit."""
     import shutil
 
+    from java9_gc_log_parser_spark import commit_log
     from java9_gc_log_parser_spark.operators.sketches import cms_sketch
 
     root = _scratch(sf_dir, "q67")
     shutil.rmtree(root, ignore_errors=True)
     src, out_root, ck = f"{root}/src", f"{root}/gens", f"{root}/ckpt"
     _docs(spark, sf_dir).repartition(8).write.parquet(src)
-    os.makedirs(out_root, exist_ok=True)
-    ptr = os.path.join(out_root, "_CURRENT")
 
-    def _cur():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return int(f.read().strip())
-
-    def _emit(batch_df, batch_id):
-        last = _cur()
-        if last is not None and batch_id <= last:
-            batch_df.count()  # drain the replayed batch, side effects skipped
-            return
+    def _apply(batch_df, batch_id, last):
         batch_df.persist()  # grid build is the only action, but keep the
-        g = cms_sketch(batch_df)  # idiom uniform with state_stream._emit
+        g = cms_sketch(batch_df)  # idiom uniform with state_stream's apply
         if last is not None:
             prev = spark.read.parquet(f"{out_root}/batch={last}")
             g = (
@@ -1124,10 +1109,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
             f"{out_root}/batch={batch_id}"
         )
         batch_df.unpersist()
-        tmp = ptr + f".tmp{batch_id}"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, ptr)
+        return {}
 
     docs_schema = _docs(spark, sf_dir).schema
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1137,7 +1119,9 @@ def q67_stream_cms_maintenance(spark, sf_dir):
             spark.readStream.schema(docs_schema)
             .option("maxFilesPerTrigger", 2)
             .parquet(src)
-            .writeStream.foreachBatch(_emit)
+            .writeStream.foreachBatch(
+                commit_log.foreach_batch(spark, out_root, _apply)
+            )
             .option("checkpointLocation", ck)
             .trigger(availableNow=True)
             .start()
@@ -1145,7 +1129,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
         _await_drained(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    final = _cur()
+    final = commit_log.last_committed(spark, out_root)
     return spark.read.parquet(f"{out_root}/batch={final}").select(
         F.col("row").cast("int").alias("row"),
         F.col("bucket").cast("int").alias("bucket"),

@@ -2,8 +2,14 @@
 
 The reference has NO fault tolerance — an exception kills the Akka stream
 (``GcService.scala:35-38``). The north rule requires the opposite: process the
-table in partition-range micro-batches, checkpoint a manifest with
+table in partition-range micro-batches, commit one record per batch with
 per-partition lineage + per-batch metrics, and resume idempotently.
+
+Layout under ``root``:
+
+    {sink}/batch=N/    batch N's rows of each sink in ``SINKS``
+    _commits/N.json    batch N's commit record: rows in, rows per sink,
+                       wall seconds, lineage (see ``commit_log``)
 
 Design:
   * batch key = ``pmod(xxhash64(conv_id), n_batches)`` — conversations stay
@@ -13,16 +19,16 @@ Design:
   * the batch key is written as a PARTITION COLUMN at source-preparation time
     (``prepare_source``): each micro-batch then reads ``batch_bucket=b/``
     only — scan bytes ∝ 1/n_batches — instead of filtering a full scan of
-    the table per batch (n_batches full scans of 100 TB). The manifest
-    records the pruned scan's file count + bytes as evidence. A raw
+    the table per batch (n_batches full scans of 100 TB). The commit record
+    holds the pruned scan's file count + bytes as evidence. A raw
     unpartitioned path still works (predicate fallback) for ad-hoc runs.
   * each sink writes to ``{root}/{sink}/batch={id}/`` with overwrite — a
     re-run of a half-finished batch replaces its output exactly (idempotent).
-  * the manifest (JSONL) line for a batch is appended only after every sink
-    for that batch has committed; a crash between sink write and manifest
-    append re-runs the batch, which overwrites in place.
-  * lineage per batch records the source path + the exact filter predicate;
-    metrics record rows in/out per sink and wall seconds.
+  * a batch's record is committed only after every sink for that batch has
+    committed; a crash before the commit re-runs the batch, which overwrites
+    in place. ``run`` skips exactly the committed batch ids.
+  * sink row counts are Observations on the write jobs (rows fed to the
+    writer), never read-backs of the output.
 
 On a real cluster the same loop runs over Iceberg snapshot ranges; the batch
 predicate becomes a snapshot/partition range and the sinks become Iceberg
@@ -31,7 +37,6 @@ appends with overwrite-by-filter.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass
@@ -39,6 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import commit_log
 from ..storage import (
     ICEBERG,
     TableRef,
@@ -58,22 +64,6 @@ class BatchResult:
     rows_in: int
     sink_rows: dict
     wall_s: float
-
-
-def _manifest_path(root: str) -> str:
-    return os.path.join(root, "manifest.jsonl")
-
-
-def completed_batches(root: str) -> set[int]:
-    path = _manifest_path(root)
-    done: set[int] = set()
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if rec.get("status") == "ok":
-                    done.add(rec["batch_id"])
-    return done
 
 
 def prepare_source(
@@ -106,23 +96,9 @@ def run_batch(
     root: str,
     batch_id: int,
     n_batches: int,
-    verify_commit: bool = False,
 ) -> BatchResult:
-    """Process one micro-batch: read its bucket, write every sink, append the
-    manifest line.
-
-    ``verify_commit``: the sink row metric is an Observation on the write job
-    — rows *fed to the writer*, not a post-commit read-back, so a silent
-    commit truncation would go unnoticed by the metric alone (the pre-r2 code
-    re-read every sink, which doubles as an integrity check but re-scans the
-    entire output per sink per batch — at 100 TB, re-reading everything just
-    written). Setting ``verify_commit=True`` restores the check cheaply: one
-    count() read-back of the SMALLEST sink (conv_state, O(conversations)
-    rows) per batch, recorded in the manifest as ``commit_check``. Resume
-    correctness never depends on the metric either way: the manifest line is
-    appended only after every sink's write action returned, and a crash
-    before the append re-runs + overwrites the whole batch.
-    """
+    """Process one micro-batch: read its bucket, write every sink, commit
+    the batch's record."""
     src = _as_ref(source_path)
     snapshot = None
     if src.format == ICEBERG:
@@ -160,31 +136,10 @@ def run_batch(
     rows_in, sink_rows = write_sinks(
         transcripts, lambda sink: os.path.join(root, sink, f"batch={batch_id}")
     )
-    commit_check = None
-    if verify_commit:
-        # cheap integrity spot-check: read back the smallest sink and compare
-        # its committed row count against the Observation metric
-        sink = "conv_state"
-        committed = read_table(
-            spark, os.path.join(root, sink, f"batch={batch_id}")
-        ).count()
-        commit_check = {
-            "sink": sink,
-            "observed": sink_rows[sink],
-            "committed": committed,
-            "ok": committed == sink_rows[sink],
-        }
-        if not commit_check["ok"]:
-            raise RuntimeError(
-                f"commit check failed for batch {batch_id}: {commit_check}"
-            )
     wall = time.perf_counter() - t0
     rec = {
-        "batch_id": batch_id,
-        "status": "ok",
         "rows_in": rows_in,
         "sink_rows": sink_rows,
-        "commit_check": commit_check,
         "wall_s": round(wall, 3),
         "lineage": {
             "source": src.location,
@@ -199,9 +154,7 @@ def run_batch(
         },
         "n_batches": n_batches,
     }
-    os.makedirs(root, exist_ok=True)
-    with open(_manifest_path(root), "a") as f:
-        f.write(json.dumps(rec) + "\n")
+    commit_log.commit(spark, root, batch_id, rec)
     return BatchResult(batch_id, rows_in, sink_rows, wall)
 
 
@@ -211,22 +164,18 @@ def run(
     root: str,
     n_batches: int = 8,
     stop_after: int | None = None,
-    verify_commit: bool = False,
 ) -> list[BatchResult]:
     """Run all pending micro-batches (resuming past completed ones).
 
     ``stop_after`` processes at most that many pending batches — the test
     hook for simulating a mid-run crash.
     """
-    done = completed_batches(root)
+    done = commit_log.committed(spark, root)
     results = []
     for b in range(n_batches):
         if b in done:
             continue
-        results.append(
-            run_batch(spark, source_path, root, b, n_batches,
-                      verify_commit=verify_commit)
-        )
+        results.append(run_batch(spark, source_path, root, b, n_batches))
         if stop_after is not None and len(results) >= stop_after:
             break
     return results

@@ -58,7 +58,7 @@ class TableRef:
     snapshot_id: int | None = None
     #: Iceberg incremental read: rows appended AFTER this snapshot
     #: (exclusive) up to ``end_snapshot_id`` (inclusive; current if None).
-    #: This is the checkpoint runner's "what's new since my manifest" scan —
+    #: This is the checkpoint runner's "what's new since my last commit" scan —
     #: the table-scale replacement for the reference's file-tail byte offset.
     start_snapshot_id: int | None = None
     end_snapshot_id: int | None = None
@@ -253,7 +253,7 @@ def write_table(
 def current_snapshot_id(spark: SparkSession, table: TableRef | str) -> int | None:
     """Latest committed Iceberg snapshot id (None for an empty table).
 
-    The checkpoint runner records this in its manifest after each batch; the
+    The checkpoint runner records this in each batch's commit record; the
     next run reads ``TableRef(start_snapshot_id=<recorded>)`` to scan only
     rows committed since — exact incremental resume with no re-scan.
     """
@@ -273,13 +273,13 @@ def table_scan_stats(
     spark: SparkSession, table: TableRef | str, where: str | None = None
 ) -> tuple[int, int]:
     """(file_count, total_bytes) a scan of ``table`` would read — lineage
-    evidence for the checkpoint manifest.
+    evidence for the checkpoint runner's commit records.
 
     Iceberg leg: one query over the ``.files`` METADATA table (manifest-backed,
     never touches data files; ``where`` on partition columns narrows it to the
     pruned scan). Parquet leg: a recursive listing through the Hadoop
     FileSystem API (r3 verdict task #9) — the same listing a cluster driver
-    does against HDFS/S3A, so the lineage manifest is valid wherever the
+    does against HDFS/S3A, so the lineage record is valid wherever the
     table lives, not just where the driver shares a local filesystem with
     the data (the pre-r4 ``os.walk`` assumption).
     """

@@ -8,19 +8,17 @@ The maintained index is a generation store under ``out_root``:
                         artifact)
     batch=N/cell=K/     per-micro-batch appends: the vectors of batch N
                         encoded against the FIXED index metadata
-    _CURRENT            atomic pointer: last durably-applied batch id
+    _commits/N.json     batch N's commit record (``commit_log``)
+    ckpt/               the stream's own checkpoint
 
-Fault-tolerance contract (the ST3 north-rule discipline, same as
-``state_stream`` / q67): foreachBatch is at-least-once, so each
-generation is keyed by batch_id and committed via an atomic pointer
-replace; a replayed ``batch_id <= _CURRENT`` is drained without side
-effects, and a crash between the generation write and the pointer flip
-re-runs the batch with ``mode("overwrite")`` — idempotent either way.
-``fail_after`` injects a crash between batches so the resume path is
-exercised by a real test, not asserted in prose.
-Keep or discard the stream checkpoint and this store together: the drain
-keys on the bare batch id, so with only the checkpoint lost, restarted ids
-drain batches of new files and drop their vectors (fix: ROADMAP (C)).
+Fault-tolerance contract (the ST3 north-rule discipline, shared with
+``state_stream``, q67 and the checkpoint runner through ``commit_log``):
+generation N is written with ``mode("overwrite")`` and then committed, so a
+crash before the commit re-runs the batch in place, and a replayed batch id
+at or below the last commit is drained without side effects. Keep or discard
+the stream checkpoint and this store together: the drain keys on the bare
+batch id, so with only the checkpoint lost, restarted ids drain batches of
+new files and drop their vectors (fix: ROADMAP (C)).
 
 Scale shape (100 TB/day of arriving vectors): per-batch cost is batch
 rows × a few KB of broadcast metadata (``ivfpq_encode``'s plan is
@@ -36,15 +34,13 @@ rule requires.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.operators.similarity import ivfpq_encode
 
 __all__ = [
-    "current_generation",
     "write_base_generation",
     "maintain_index",
     "read_index",
@@ -58,14 +54,6 @@ INDEX_SCHEMA = T.StructType([
     T.StructField("code", T.IntegerType()),
     T.StructField("cell", T.LongType()),
 ])
-
-
-def current_generation(out_root: str) -> int | None:
-    ptr = os.path.join(out_root, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip())
 
 
 def write_base_generation(
@@ -89,7 +77,6 @@ def maintain_index(
     books_schema,
     max_files_per_trigger: int = 2,
     timeout_s: int = 600,
-    fail_after: int | None = None,
 ) -> None:
     """Drain the vector stream, appending one encoded generation per
     micro-batch; blocks until the availableNow backlog is done.
@@ -97,25 +84,10 @@ def maintain_index(
     Metadata arrives as COLLECTED rows + schema (not DataFrames): that is
     what pins the no-corpus-lineage property — the per-batch encode plan
     physically cannot re-scan the corpus because nothing in scope refers
-    to it. ``fail_after=N`` raises after N new generations are applied
-    (simulated crash between batches); rerunning without it resumes from
-    the checkpoint and must drain replayed ids without re-applying them.
+    to it.
     """
-    os.makedirs(out_root, exist_ok=True)
-    ptr = os.path.join(out_root, "_CURRENT")
-    applied_this_run = 0
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal applied_this_run
-        last = current_generation(out_root)
-        if last is not None and batch_id <= last:
-            batch_df.count()  # drain the replayed batch, side effects skipped
-            return
-        if fail_after is not None and applied_this_run >= fail_after:
-            raise RuntimeError(
-                f"injected crash before batch {batch_id} "
-                f"(applied {applied_this_run} this run)"
-            )
+    def _apply(batch_df: DataFrame, batch_id: int, last: int | None) -> dict:
         enc = ivfpq_encode(
             batch_df,
             spark.createDataFrame(cells_rows, cells_schema),
@@ -124,17 +96,15 @@ def maintain_index(
         enc.write.partitionBy("cell").mode("overwrite").parquet(
             f"{out_root}/batch={batch_id}"
         )
-        tmp = ptr + f".tmp{batch_id}"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, ptr)
-        applied_this_run += 1
+        return {}
 
     q = (
         spark.readStream.schema(input_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_path)
-        .writeStream.foreachBatch(_emit)
+        .writeStream.foreachBatch(
+            commit_log.foreach_batch(spark, out_root, _apply)
+        )
         .option("checkpointLocation", f"{out_root}/ckpt")
         .trigger(availableNow=True)
         .start()
@@ -152,14 +122,9 @@ def read_index(spark: SparkSession, out_root: str) -> DataFrame:
     ``batch=N`` dir names as a partition column. Every read carries
     ``INDEX_SCHEMA``: an empty micro-batch commits a generation dir with no
     part files, which has no schema to infer."""
-    final = current_generation(out_root)
-    gens = [f"{out_root}/base"] + (
-        [f"{out_root}/batch={i}" for i in range(int(final) + 1)]
-        if final is not None
-        else []
-    )
+    final = commit_log.last_committed(spark, out_root)
     read = spark.read.schema(INDEX_SCHEMA).parquet
-    idx = read(gens[0])
-    for g in gens[1:]:
-        idx = idx.unionByName(read(g))
+    idx = read(f"{out_root}/base")
+    for i in range(0 if final is None else final + 1):
+        idx = idx.unionByName(read(f"{out_root}/batch={i}"))
     return idx

@@ -11,7 +11,8 @@ Modes:
   batch      one-shot pipeline (plans.pipeline.write_sinks): parse once into
              the cache, write every sink once; the printed sink_rows are
              Observations on the writes, not read-backs of the output
-  checkpoint resumable micro-batches with manifest/lineage/metrics (default);
+  checkpoint resumable micro-batches, one commit record (lineage, metrics)
+             per batch under <output>/_commits (default);
              --prepare-source first rewrites the input partitioned by
              batch_bucket so every micro-batch is a pruned 1/n scan
   synth      generate a transcripts parquet from an events parquet dir
@@ -74,7 +75,7 @@ def main(argv: list[str] | None = None) -> None:
         "mode": "checkpoint",
         "batches_run": [r.batch_id for r in results],
         "rows_in": sum(r.rows_in for r in results),
-        "manifest": f"{args.output}/manifest.jsonl",
+        "commits": f"{args.output}/_commits",
     }))
 
 

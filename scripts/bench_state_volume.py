@@ -3,16 +3,16 @@
 The batch pipeline's cost is linear by construction (map-side parse +
 hash aggs); the two paths with per-run STATE are the streaming assembler
 (state store: one entry per open conversation) and the checkpoint runner
-(manifest + per-batch overwrite). This script runs both at 1x and Nx the
+(commit log + per-batch overwrite). This script runs both at 1x and Nx the
 sf-dir's transcripts (default N=10) and reports per-turn cost at each
 volume — if the stateful machinery degraded super-linearly (state-store
-commits, snapshot compaction, manifest growth), the Nx per-turn cost
+commits, snapshot compaction, commit-log growth), the Nx per-turn cost
 would inflate; the recorded result goes in BASELINE.md's measured table.
 
 Streaming leg mirrors q26's shape (32-file scatter, 16 files/trigger,
 8 state partitions, availableNow drain to a parquet sink). Checkpoint leg
 mirrors q27's shape minus the crash (prepare_source + 4 pruned batches,
-all 5 sinks + manifest).
+all 5 sinks + one commit record per batch).
 
 Usage: python scripts/bench_state_volume.py [--replicate 10]
 Prints one JSON line.

@@ -22,3 +22,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def crash_at_commit(monkeypatch):
+    """``crash_at_commit(n)`` lets ``commit_log.commit`` publish ``n``
+    records, then makes it raise: a crash after a batch's output is written,
+    before its record is. ``monkeypatch.undo()`` restores the real commit."""
+    from java9_gc_log_parser_spark import commit_log
+
+    real = commit_log.commit
+
+    def arm(n: int) -> None:
+        done = []
+
+        def commit(spark, root, batch_id, record):
+            if len(done) >= n:
+                raise RuntimeError(
+                    f"injected crash at the commit of batch {batch_id}"
+                )
+            real(spark, root, batch_id, record)
+            done.append(batch_id)
+
+        monkeypatch.setattr(commit_log, "commit", commit)
+
+    return arm

@@ -2,11 +2,11 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 
+from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.plans import checkpoint as cp
 from java9_gc_log_parser_spark.plans.pipeline import SINKS, build, write_sinks
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
@@ -23,20 +23,8 @@ def _collect_sorted(df, cols):
     return sorted([tuple(r) for r in df.select(*cols).collect()], key=repr)
 
 
-def test_crash_resume_identical(spark, source_path, tmp_path):
-    root = str(tmp_path / "out")
-    n_batches = 4
-
-    # run 2 of 4 batches, then "crash"
-    r1 = cp.run(spark, source_path, root, n_batches, stop_after=2)
-    assert len(r1) == 2
-    assert cp.completed_batches(root) == {0, 1}
-
-    # resume: only the remaining batches run
-    r2 = cp.run(spark, source_path, root, n_batches)
-    assert sorted(b.batch_id for b in r2) == [2, 3]
-
-    # resumed output == single-shot pipeline output, sink by sink
+def _assert_matches_single_shot(spark, root, source_path):
+    """Every sink of the run under ``root`` equals the single-shot pipeline."""
     single = build(spark.read.parquet(source_path))
     for sink, cols in [
         ("assembled", ["conv_id", "event_id", "pause_type", "duration_ms"]),
@@ -50,11 +38,65 @@ def test_crash_resume_identical(spark, source_path, tmp_path):
     single["parsed"].unpersist()
 
 
+def test_crash_resume_identical(spark, source_path, tmp_path):
+    root = str(tmp_path / "out")
+    n_batches = 4
+
+    # run 2 of 4 batches, then "crash"
+    r1 = cp.run(spark, source_path, root, n_batches, stop_after=2)
+    assert len(r1) == 2
+    assert set(commit_log.committed(spark, root)) == {0, 1}
+
+    # resume: only the remaining batches run
+    r2 = cp.run(spark, source_path, root, n_batches)
+    assert sorted(b.batch_id for b in r2) == [2, 3]
+
+    # resumed output == single-shot pipeline output, sink by sink
+    _assert_matches_single_shot(spark, root, source_path)
+
+
+def test_crash_at_commit_then_resume(spark, source_path, tmp_path,
+                                     monkeypatch, crash_at_commit):
+    """A crash after batch 1's sinks are written but before its record is
+    committed: the resume re-runs batch 1 in place, every record appears
+    once, and the sinks equal the single-shot pipeline (no double count)."""
+    root = str(tmp_path / "out_crash")
+    n_batches = 3
+    crash_at_commit(1)
+    with pytest.raises(RuntimeError, match="commit of batch 1"):
+        cp.run(spark, source_path, root, n_batches)
+    assert set(commit_log.committed(spark, root)) == {0}
+
+    monkeypatch.undo()
+    resumed = cp.run(spark, source_path, root, n_batches)
+    assert [r.batch_id for r in resumed] == [1, 2]
+    recs = commit_log.committed(spark, root)
+    assert sorted(recs) == list(range(n_batches))
+    assert sorted(os.listdir(os.path.join(root, commit_log.COMMITS))) == sorted(
+        [f"{i}.json" for i in range(n_batches)]
+        + [f".{i}.json.crc" for i in range(n_batches)]
+    )
+    assert sum(r["rows_in"] for r in recs.values()) == (
+        spark.read.parquet(source_path).count()
+    )
+    _assert_matches_single_shot(spark, root, source_path)
+
+
+def test_uri_root_resumes_from_bare_path(spark, source_path, tmp_path):
+    """The commit log lives under ``root`` however it is spelled: a run
+    under a ``file://`` URI is complete when resumed with the bare path,
+    and nothing lands under the working directory."""
+    root = str(tmp_path / "out_uri")
+    cp.run(spark, source_path, "file://" + root, 2)
+    assert [r.batch_id for r in cp.run(spark, source_path, root, 2)] == []
+    assert not os.path.exists(os.path.join(os.getcwd(), "file:"))
+
+
 def test_rerun_is_idempotent(spark, source_path, tmp_path):
     root = str(tmp_path / "out2")
     cp.run(spark, source_path, root, 2)
     n_before = cp.read_sink(spark, root, "assembled").count()
-    # simulate a crash after sink write but before manifest append: re-run
+    # simulate a crash after sink write but before the commit: re-run
     # batch 0 directly — overwrite makes it idempotent
     cp.run_batch(spark, source_path, root, 0, 2)
     assert cp.read_sink(spark, root, "assembled").count() == n_before
@@ -63,11 +105,9 @@ def test_rerun_is_idempotent(spark, source_path, tmp_path):
 def test_manifest_lineage_and_metrics(spark, source_path, tmp_path):
     root = str(tmp_path / "out3")
     cp.run(spark, source_path, root, 2)
-    with open(os.path.join(root, "manifest.jsonl")) as f:
-        recs = [json.loads(l) for l in f]
+    recs = list(commit_log.committed(spark, root).values())
     assert len(recs) == 2
     for rec in recs:
-        assert rec["status"] == "ok"
         assert rec["rows_in"] > 0
         assert "pause_events" in rec["sink_rows"]
         assert rec["wall_s"] > 0
@@ -80,7 +120,7 @@ def test_manifest_lineage_and_metrics(spark, source_path, tmp_path):
 
 def test_prepared_source_prunes_scans(spark, sf_dir, tmp_path):
     """With a bucket-partitioned source each micro-batch scans ~1/n of the
-    data (manifest records the pruned file set), and results still equal the
+    data (commit records hold the pruned file set), and results still equal the
     single-shot pipeline."""
     src = str(tmp_path / "psrc")
     root = str(tmp_path / "pout")
@@ -88,8 +128,7 @@ def test_prepared_source_prunes_scans(spark, sf_dir, tmp_path):
     cp.prepare_source(spark, synth_transcripts(spark, sf_dir), src, n_batches)
 
     cp.run(spark, src, root, n_batches)
-    with open(os.path.join(root, "manifest.jsonl")) as f:
-        recs = [json.loads(l) for l in f]
+    recs = list(commit_log.committed(spark, root).values())
     assert len(recs) == n_batches
     total_bytes = sum(r["lineage"]["scan_bytes"] for r in recs)
     for rec in recs:
@@ -132,8 +171,8 @@ def test_runner_counts_match_committed_sinks(spark, source_path, tmp_path):
 def test_empty_micro_batch_counts_zero_and_commits(spark, source_path,
                                                   tmp_path):
     """A bucket id past the last one selects no rows: every count is 0,
-    each sink still commits a readable empty batch dir, and the manifest
-    line is still written."""
+    each sink still commits a readable empty batch dir, and the batch's
+    record is still committed."""
     root = str(tmp_path / "empty")
     r = cp.run_batch(spark, source_path, root, 2, 2)
     assert r.rows_in == 0
@@ -141,9 +180,8 @@ def test_empty_micro_batch_counts_zero_and_commits(spark, source_path,
     for sink in SINKS:
         committed = spark.read.parquet(os.path.join(root, sink, "batch=2"))
         assert committed.count() == 0, sink
-    with open(os.path.join(root, "manifest.jsonl")) as f:
-        recs = [json.loads(l) for l in f]
-    assert [(rec["batch_id"], rec["status"], rec["rows_in"]) for rec in recs] == [
-        (2, "ok", 0)
+    recs = commit_log.committed(spark, root)
+    assert [(rec["batch_id"], rec["rows_in"]) for rec in recs.values()] == [
+        (2, 0)
     ]
-    assert recs[0]["sink_rows"] == {sink: 0 for sink in SINKS}
+    assert recs[2]["sink_rows"] == {sink: 0 for sink in SINKS}

@@ -1,9 +1,9 @@
 """Crash/resume contract of the streaming IVF×PQ index maintenance
 (q141's engine, `streaming/index_maintenance.py`).
 
-The generation + atomic-pointer discipline is the same as q67/q51's, but
-here it is exercised under a REAL injected failure: the first run dies
-between micro-batches, the second resumes from the Structured Streaming
+The generation + commit-log discipline is the same as q67/q51's, but
+here it is exercised under a REAL injected failure: the first run dies at
+the commit of its second micro-batch, the second resumes from the Structured Streaming
 checkpoint, replayed batch ids are drained without re-applying, and the
 final maintained index must equal the one-shot batch build — the ST3
 resumability evidence (GcService.scala:35-38 has none; the north rule
@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.operators.similarity import (
     ivfpq_encode,
     ivfpq_train,
@@ -34,7 +35,8 @@ def _index_rows(df):
     return sorted((r.vec_id, r.cell, r.s, r.code) for r in df.collect())
 
 
-def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path):
+def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path,
+                                          monkeypatch, crash_at_commit):
     embs, base, cells, books = trained
     src = str(tmp_path / "src")
     out_root = str(tmp_path / "gens")
@@ -42,26 +44,29 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path):
     im.write_base_generation(base, cells, books, out_root)
     cells_rows, books_rows = cells.collect(), books.collect()
 
-    # run 1: dies after ONE applied generation (injected between batches)
+    # run 1: dies after ONE committed generation — batch 1's generation is
+    # written, its commit raises
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    crash_at_commit(1)
     with pytest.raises(StreamingQueryException, match="injected crash"):
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,
-            max_files_per_trigger=2, fail_after=1,
+            max_files_per_trigger=2,
         )
-    after_crash = im.current_generation(out_root)
+    after_crash = commit_log.last_committed(spark, out_root)
     assert after_crash == 0  # exactly one generation committed pre-crash
 
-    # run 2: resume from the checkpoint; batch 0 is replayed and must be
-    # DRAINED, not re-applied — then the backlog finishes
+    # run 2: resume from the checkpoint; batch 0 stays committed, batch 1
+    # is replayed and re-applied in place — then the backlog finishes
+    monkeypatch.undo()
     im.maintain_index(
         spark, src, embs.schema, out_root,
         cells_rows, cells.schema, books_rows, books.schema,
         max_files_per_trigger=2,
     )
-    final = im.current_generation(out_root)
+    final = commit_log.last_committed(spark, out_root)
     assert final is not None and final > after_crash
 
     idx = im.read_index(spark, out_root)
@@ -78,7 +83,7 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path):
 def test_replay_of_committed_batch_is_skipped(spark, sf_dir, trained,
                                               tmp_path):
     """Deleting the checkpoint (but not the store) forces EVERY batch to
-    replay with fresh ids from 0: all of them collide with _CURRENT or
+    replay with fresh ids from 0: all of them collide with the last commit or
     rewrite identical content — the store must come out unchanged."""
     import shutil
 
@@ -112,7 +117,7 @@ def test_empty_batch_commits_readable_generation(spark, sf_dir, trained,
         spark, src, embs.schema, out_root,
         cells.collect(), cells.schema, books.collect(), books.schema,
     )
-    assert im.current_generation(out_root) == 0
+    assert commit_log.last_committed(spark, out_root) == 0
     assert _index_rows(im.read_index(spark, out_root)) == _index_rows(
         ivfpq_encode(base, cells, books)
     )

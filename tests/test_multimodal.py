@@ -401,8 +401,8 @@ def test_png_grayscale_expands_to_rgb():
 
 
 def test_png_rejects_unsupported_shapes():
-    """16-bit, palette, interlaced, truncated, and bad-length streams all
-    dead-letter (None) — never raise."""
+    """16-bit, palette, interlaced, truncated, bad-length and truncated-zlib
+    streams all dead-letter (None) — never raise."""
     from java9_gc_log_parser_spark.operators.multimodal import (
         _decode_image,
         _decode_png,
@@ -417,6 +417,18 @@ def test_png_rejects_unsupported_shapes():
     # palette color type (3) is out of scope for the zlib path
     assert _decode_png(_png(w, h, raster, color_type=3)) is None
     assert _decode_png(ok[: len(ok) // 2]) is None  # truncated mid-chunk
+    # truncated zlib stream inside an IDAT whose chunk length is consistent
+    import struct
+    import zlib
+
+    def with_idat(z):  # signature + IHDR, one IDAT of ``z``, IEND
+        idat = struct.pack(">I", len(z)) + b"IDAT" + z + struct.pack(
+            ">I", zlib.crc32(b"IDAT" + z))
+        return ok[:33] + idat + ok[-12:]
+
+    raw = b"".join(b"\x00" + raster[y * 9:(y + 1) * 9] for y in range(h))
+    assert _decode_png(with_idat(zlib.compress(raw))) == (w, h, raster)
+    assert _decode_png(with_idat(zlib.compress(raw)[:-5])) is None
     assert _decode_image(b"") is None  # empty payload guard (ADVICE r4)
     assert _decode_image(None) is None  # NULL payload guard (ADVICE r4)
 

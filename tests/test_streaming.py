@@ -198,10 +198,10 @@ def test_event_time_watermark_dead_letter(spark, tmp_path):
 def test_stream_conv_state_matches_batch_final(spark, stream_source, tmp_path):
     """After the snapshot stream drains, the cumulative state equals the
     batch conv_state_final over the same input, and every micro-batch left a
-    snapshot + a metrics heartbeat line."""
-    import json
+    state generation (the snapshot) + a heartbeat commit record."""
     import os
 
+    from java9_gc_log_parser_spark import commit_log
     from java9_gc_log_parser_spark.operators.aggregate import conv_state_final
     from java9_gc_log_parser_spark.streaming.state_stream import (
         final_state,
@@ -222,24 +222,23 @@ def test_stream_conv_state_matches_batch_final(spark, stream_source, tmp_path):
     )
     assert got == want and len(got) > 0
 
-    with open(os.path.join(out_root, "metrics.jsonl")) as f:
-        metrics = [json.loads(line) for line in f]
+    metrics = commit_log.committed(spark, out_root)
     assert len(metrics) >= 2  # several micro-batches actually ran
-    assert {m["batch_id"] for m in metrics} == set(range(len(metrics)))
-    snapshots = os.listdir(os.path.join(out_root, "snapshots"))
-    assert len(snapshots) == len(metrics)
+    assert set(metrics) == set(range(len(metrics)))
+    generations = os.listdir(os.path.join(out_root, "state_gens"))
+    assert len(generations) == len(metrics)
 
 
 def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_path):
     """A replayed batch_id (at-least-once foreachBatch recovery) must not
     double-count. Deleting the stream's OWN checkpoint while keeping the
     state makes the re-run re-fire every batch id from 0 — the worst-case
-    replay — and every one must be skipped by the _CURRENT guard."""
+    replay — and every one must be skipped by the commit-log guard."""
     import os
     import shutil
 
+    from java9_gc_log_parser_spark import commit_log
     from java9_gc_log_parser_spark.streaming.state_stream import (
-        _current_batch_id,
         final_state,
         stream_conv_state,
     )
@@ -250,10 +249,9 @@ def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_pa
     q.awaitTermination(300)
 
     before = sorted(map(tuple, final_state(spark, out_root).collect()))
-    last = _current_batch_id(out_root)
+    last = commit_log.last_committed(spark, out_root)
     assert last is not None and last >= 1
-    with open(os.path.join(out_root, "metrics.jsonl")) as f:
-        metrics_before = f.read()
+    metrics_before = commit_log.committed(spark, out_root)
     gens_before = sorted(os.listdir(os.path.join(out_root, "state_gens")))
 
     # lose the streaming engine's checkpoint, keep the applied state
@@ -262,11 +260,58 @@ def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_pa
                            max_files_per_trigger=16)
     q2.awaitTermination(300)
 
-    assert _current_batch_id(out_root) == last
+    assert commit_log.last_committed(spark, out_root) == last
     assert sorted(map(tuple, final_state(spark, out_root).collect())) == before
-    with open(os.path.join(out_root, "metrics.jsonl")) as f:
-        assert f.read() == metrics_before  # heartbeat not duplicated
+    # heartbeat not re-committed (a re-commit would carry a new wall_s)
+    assert commit_log.committed(spark, out_root) == metrics_before
     assert sorted(os.listdir(os.path.join(out_root, "state_gens"))) == gens_before
+
+
+def test_state_crash_at_commit_then_resume(spark, stream_source, tmp_path,
+                                           monkeypatch, crash_at_commit):
+    """A crash after generation 1 is written but before batch 1's heartbeat
+    is committed: the resumed stream replays batch 1 onto generation 0, so
+    the final state equals the batch conv_state_final (no double count) and
+    every heartbeat record 0..n-1 is committed exactly once."""
+    import os
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from java9_gc_log_parser_spark import commit_log
+    from java9_gc_log_parser_spark.operators.aggregate import conv_state_final
+    from java9_gc_log_parser_spark.streaming.state_stream import (
+        final_state,
+        stream_conv_state,
+    )
+
+    out_root = str(tmp_path / "state_crash")
+    crash_at_commit(1)
+    q = stream_conv_state(spark, stream_source, INPUT_SCHEMA, out_root,
+                          max_files_per_trigger=8)
+    with pytest.raises(StreamingQueryException, match="commit of batch 1"):
+        q.awaitTermination(300)
+    assert set(commit_log.committed(spark, out_root)) == {0}
+
+    monkeypatch.undo()
+    q2 = stream_conv_state(spark, stream_source, INPUT_SCHEMA, out_root,
+                           max_files_per_trigger=8)
+    q2.awaitTermination(300)
+
+    got = sorted(map(tuple, final_state(spark, out_root).collect()))
+    ok_events = assembled_pauses(supported_types_filter(
+        parse_lines(spark.read.parquet(stream_source))
+    ))
+    want = sorted(map(tuple, conv_state_final(ok_events).collect()))
+    assert got == want and len(got) > 0
+    beats = commit_log.committed(spark, out_root)
+    n = len(beats)
+    assert n >= 2 and sorted(beats) == list(range(n))
+    assert sorted(
+        f for f in os.listdir(os.path.join(out_root, commit_log.COMMITS))
+        if not f.endswith(".crc")
+    ) == sorted(f"{i}.json" for i in range(n))
+    assert sum(b["events"] for b in beats.values()) == ok_events.count()
+    assert beats[n - 1]["convs"] == len(want)
 
 
 def test_atleastonce_dedup_drops_redeliveries(spark, tmp_path):
